@@ -563,12 +563,15 @@ def contract_line(best: dict) -> dict:
     JSON ("key":, quotes, commas) before any value. The driver parsed
     the 4.3 KB r13 line (now_bench_ok: true), so the compaction only
     adds margin. Top-level value/headline_value keep 3 decimals (the
-    cross-round comparison numbers)."""
+    cross-round comparison numbers), and so do per-query values under
+    0.1 s — at 2 decimals a row under 5 ms would print as 0.0."""
     return {
         "metric": best["metric"],
         "value": best["value"],
         "unit": best["unit"],
-        "queries": {k: round(v, 2) for k, v in best["queries"].items()},
+        "queries": {
+            k: round(v, 3 if v < 0.1 else 2) for k, v in best["queries"].items()
+        },
         "headline_value": best["headline_value"],
         "sf": best["sf"],
     }

@@ -122,24 +122,23 @@ N_SIMHASH_BANDS = SIMHASH_BITS // SIMHASH_BAND_BITS
 HAMMING_T = 6
 COSINE_DEDUP_T = 0.45
 
-# Exact-eval sampling contract (VERDICT r10 task 3): the trust rows
-# that measure a fast path against an EXACT quadratic baseline
-# (dedup_routed_eval, dedup_routed_probe_sweep, dedup_lsh_br_sweep)
-# cap the baseline corpus at EXACT_EVAL_SAMPLE_BOUND items. Above the
-# bound, the exact denominator is computed on a deterministic
-# hash-sample of ~EXACT_EVAL_SAMPLE_TARGET items
-# (pmod(xxhash64(id), 1e6) < frac·1e6 — reproducible, engine-portable,
-# no RNG state) and recall is estimated on pairs whose BOTH endpoints
-# fall in the sample; the quadratic cost drops by (target/n)² while
-# the fast path under evaluation still runs on the full corpus.
-# Statistical contract: with s exact pairs surviving in the sample,
-# the recall estimate is a binomial proportion with standard error
-# <= 1/(2·sqrt(s)) — i.e. a ±1/sqrt(s) 95% CI; the trust row's job is
-# an order-of-magnitude recall statement, so s in the thousands (the
-# target yields ~(65536/n)²·|exact| pairs at uniform pair density) is
-# ample. BELOW the bound the behavior is byte-identical to the full
-# exact baseline (pinned by tests forcing the bound), so the DuckDB
-# oracles remain full-exact and parity stays green at every test SF.
+# Exact-eval sampling contract (VERDICT r10 task 3): every trust row
+# that measures a fast path against an EXACT quadratic baseline builds
+# that baseline through _exact_baseline below, which caps its corpus at
+# EXACT_EVAL_SAMPLE_BOUND items. Above the bound the baseline runs on a
+# deterministic hash-sample of ~EXACT_EVAL_SAMPLE_TARGET items
+# (pmod(xxhash64(id), 1e6) < frac·1e6 — reproducible, no RNG state) and
+# recall numerators are scoped to pairs with BOTH endpoints in the
+# sample (_pairs_within). With s exact pairs surviving, the recall
+# estimate's standard error is <= 1/(2·sqrt(s)). Below the bound the
+# baseline is byte-identical to the full exact one (pinned by tests
+# forcing the bound), so the DuckDB oracles stay full-exact.
+#
+# The rest of the harness: _counts folds independent counts into ONE
+# job, _width_grid folds a ranked assignment's probe-width grid (the
+# body of both probe sweeps, _probe_sweep), _routed_eval is the body
+# of both routed trust rows, and similarity._recall_at_k scores ANN
+# arms against the exact top-k.
 EXACT_EVAL_SAMPLE_BOUND = 100_000
 EXACT_EVAL_SAMPLE_TARGET = 65_536
 
@@ -172,6 +171,51 @@ def _pairs_within(pairs: DataFrame, ids: DataFrame, a: str, b: str) -> DataFrame
     return pairs.join(
         ids.withColumnRenamed(col, a), a, "left_semi"
     ).join(ids.withColumnRenamed(col, b), b, "left_semi")
+
+
+def _exact_baseline(corpus: DataFrame, id_col: str, n: int, pairs_of):
+    """(exact pairs, sample ids or None) for an ``n``-item corpus, with
+    ``pairs_of(frame, n_hint)`` building one (metric, threshold)'s
+    exact pairs. Ids come back only when the corpus was hash-sampled:
+    callers scope recall numerators with _pairs_within and count the
+    ids for the eval corpus size."""
+    ev, sampled = _exact_eval_sample(corpus, id_col, n)
+    if not sampled:
+        return pairs_of(corpus, n), None
+    return pairs_of(ev, min(n, EXACT_EVAL_SAMPLE_TARGET)), ev.select(id_col)
+
+
+def _cosine_baseline(spark: SparkSession, emb: DataFrame, n: int):
+    """_exact_baseline for embedding near-dups: (vec_a, vec_b) pairs
+    at cosine >= COSINE_DEDUP_T from the blocked pair-matmul."""
+    def pairs_of(ev, hint):
+        return _blocked_cosine_pairs(spark, ev, n_hint=hint).select("vec_a", "vec_b")
+
+    return _exact_baseline(emb, "vec_id", n, pairs_of)
+
+
+def _counts(*kc: DataFrame, **frames: DataFrame) -> dict:
+    """Row counts of every keyword frame plus the ready (k, c) rows of
+    every positional frame, in ONE concurrent job (r13, guide §2.6 —
+    the q_sketch_error_bounds discipline): the legs union into one
+    small collect, so wall-clock tracks the slowest subtree, not the
+    sum."""
+    legs = [
+        df.agg(F.count("*").cast("bigint").alias("c")).select(
+            F.lit(k).alias("k"), "c"
+        )
+        for k, df in frames.items()
+    ]
+    return {
+        r["k"]: int(r["c"])
+        for r in functools.reduce(DataFrame.unionAll, [*legs, *kc]).collect()
+    }
+
+
+def _pair_budget(c: str) -> "F.Column":
+    """Σ C(n, 2) over a per-bucket member-count column: the candidate
+    pairs a bucket self-join scores (multi-probe duplicates included)."""
+    return F.sum(F.col(c) * (F.col(c) - 1) / 2).cast("bigint")
 
 
 def _shingle_rows_from(spark: SparkSession, docs: DataFrame, mask_bits: int) -> DataFrame:
@@ -532,18 +576,7 @@ def _minhash_pairs_from(spark: SparkSession, docs: DataFrame) -> "tuple[DataFram
     sig = sig.persist()
     sig.count()
     sizes = sig.select("doc_id", "n_sh")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    verified = _pair_jaccard(e, cand, sizes=sizes)
+    verified = _pair_jaccard(e, _band_pairs(bands), sizes=sizes)
     pairs = verified.filter(F.col("jaccard") >= JACCARD_T).select("doc_a", "doc_b", "jaccard")
     return pairs, _UnpersistGroup(e, sig)
 
@@ -1646,9 +1679,9 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "can we trust the fast path" before pointing it at 100 TB."""
     exact = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     lsh = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    n_exact = exact.count()
-    n_lsh = lsh.count()
-    n_missed = exact.join(lsh, ["doc_a", "doc_b"], "left_anti").count()
+    missed = exact.join(lsh, ["doc_a", "doc_b"], "left_anti")
+    c = _counts(exact=exact, lsh=lsh, missed=missed)
+    n_exact, n_lsh, n_missed = c["exact"], c["lsh"], c["missed"]
     # recall from the anti-join, NOT n_lsh/n_exact: the two agree only
     # while LSH pairs ⊆ exact pairs (precision 1.0) — assert that
     # subset property instead of silently assuming it, so a threshold
@@ -1690,91 +1723,72 @@ LSH_BR_LAYOUTS = ((16, 1), (8, 2), (4, 4), (2, 8))
 LSH_BUCKET_CAP = 4096
 
 
-def _capped_band_candidates(
-    bands: DataFrame, cap: int = LSH_BUCKET_CAP, tag_col: str | None = None
-) -> "tuple[DataFrame, int | dict, _UnpersistGroup]":
-    """(candidate-pair frame, over-cap bucket count, persisted-frame
-    holder) from an LSH (doc_id, band_idx, band_sig) frame, bounding
-    per-bucket self-join fan-out at ~``cap`` members.
-
-    With ``tag_col`` (r13), the band frame carries several layouts at
-    once distinguished by that column: buckets key on (tag, band_idx,
-    band_sig), candidates come back tagged, and the over-cap count is
-    a {tag: count} dict computed in ONE job — the union form
-    dedup_lsh_br_sweep uses so all four layouts share a single bucket
-    self-join. The per-member survival predicate is unchanged
-    (xxhash64(doc_id, band_sig) vs cap/bsz with the tag-scoped bsz),
-    so each layout's survivor set is identical to running it alone.
-
-    One EAGER keyed aggregation counts the over-cap buckets (cheap:
-    the band frame reduced to bucket sizes). In the common case —
-    none over the cap, which includes every test SF — the candidate
-    join is the PLAIN band self-join, zero extra plan nodes (round
-    11 learned this the hard way: an unconditional bands⋈sizes
-    filter re-executed its subtree ~5× across the self-join aliases
-    and the count, 7 s → 17 s at sf0.1, because ReuseExchange does
-    not dedupe repeated identical subtrees). Only when a bucket
-    actually exceeds the cap do members survive with probability
-    cap/size via the deterministic xxhash64(doc_id, band_sig)
-    predicate — that `kept` frame is persisted here and released via
-    the returned holder AFTER the caller materializes the
-    candidates."""
-    keys = ([tag_col] if tag_col else []) + ["band_idx", "band_sig"]
-    sizes = bands.groupBy(*keys).agg(F.count("*").alias("bsz"))
-    if tag_col:
-        # one job for every layout's over-cap bucket count
-        n_capped = {
-            row[tag_col]: row["c"]
-            for row in sizes.filter(F.col("bsz") > cap)
-            .groupBy(tag_col)
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
-        any_capped = any(n_capped.values())
-    else:
-        n_capped = sizes.filter(F.col("bsz") > cap).count()
-        any_capped = bool(n_capped)
-    if any_capped:
-        kept = (
-            bands.join(sizes, keys)
-            .filter(
-                (F.col("bsz") <= cap)
-                | (
-                    F.pmod(
-                        F.xxhash64("doc_id", "band_sig"), F.lit(1_000_000)
-                    )
-                    < (
-                        F.lit(cap).cast("long")
-                        * F.lit(1_000_000)
-                        / F.col("bsz")
-                    ).cast("long")
-                )
-            )
-            .select("doc_id", *keys)
-            .persist()
-        )
-        holder = _UnpersistGroup(kept)
-    else:
-        kept = bands
-        holder = _UnpersistGroup()
-    ka, kb = kept.alias("ka"), kept.alias("kb")
-    cand = (
-        ka.join(
-            kb,
-            functools.reduce(
-                lambda acc, k: acc & (F.col(f"ka.{k}") == F.col(f"kb.{k}")),
-                keys,
-                F.col("ka.doc_id") < F.col("kb.doc_id"),
-            ),
-        )
+def _band_pairs(bands: DataFrame, tags: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct (tags..., doc_a < doc_b) pairs sharing an LSH bucket —
+    the band self-join keyed on (tags..., band_idx, band_sig)."""
+    keys = [*tags, "band_idx", "band_sig"]
+    ka, kb = bands.alias("ka"), bands.alias("kb")
+    same = functools.reduce(
+        lambda acc, k: acc & (F.col(f"ka.{k}") == F.col(f"kb.{k}")),
+        keys,
+        F.col("ka.doc_id") < F.col("kb.doc_id"),
+    )
+    return (
+        ka.join(kb, same)
         .select(
-            *[F.col(f"ka.{k}") for k in ([tag_col] if tag_col else [])],
+            *[F.col(f"ka.{t}") for t in tags],
             F.col("ka.doc_id").alias("doc_a"),
             F.col("kb.doc_id").alias("doc_b"),
         )
         .distinct()
     )
-    return cand, n_capped, holder
+
+
+def _capped_band_candidates(
+    bands: DataFrame, cap: int = LSH_BUCKET_CAP, tag_col: str | None = None
+) -> "tuple[DataFrame, int | dict, _UnpersistGroup]":
+    """(candidate-pair frame, over-cap bucket count, persisted-frame
+    holder) from an LSH (doc_id, band_idx, band_sig) frame, bounding
+    per-bucket self-join fan-out at ~``cap`` members. With
+    ``tag_col`` (r13) the frame carries several layouts at once:
+    buckets key on (tag, band_idx, band_sig), candidates come back
+    tagged, and the over-cap count is a {tag: count} dict from ONE
+    job; each layout's survivors equal running it alone.
+
+    One EAGER aggregation counts the over-cap buckets. With none over
+    the cap (every test SF) the candidates are the PLAIN band
+    self-join — an unconditional bands⋈sizes filter re-executed its
+    subtree ~5× (7 s → 17 s at sf0.1; ReuseExchange does not dedupe
+    repeated subtrees). Otherwise members survive with probability
+    cap/size via the deterministic xxhash64(doc_id, band_sig)
+    predicate; that `kept` frame is persisted and released via the
+    holder AFTER the caller materializes the candidates."""
+    tags = (tag_col,) if tag_col else ()
+    keys = [*tags, "band_idx", "band_sig"]
+    sizes = bands.groupBy(*keys).agg(F.count("*").alias("bsz"))
+    over = sizes.filter(F.col("bsz") > cap)
+    if tag_col:
+        # one job for every layout's over-cap bucket count
+        n_capped = {
+            row[tag_col]: row["c"]
+            for row in over.groupBy(tag_col).agg(F.count("*").alias("c")).collect()
+        }
+        any_capped = any(n_capped.values())
+    else:
+        n_capped = over.count()
+        any_capped = bool(n_capped)
+    if not any_capped:
+        return _band_pairs(bands, tags), n_capped, _UnpersistGroup()
+    survive = F.pmod(F.xxhash64("doc_id", "band_sig"), F.lit(1_000_000)) < (
+        F.lit(cap).cast("long") * F.lit(1_000_000) / F.col("bsz")
+    ).cast("long")
+    kept = (
+        bands.join(sizes, keys)
+        .filter((F.col("bsz") <= cap) | survive)
+        .select("doc_id", *keys)
+        .persist()
+    )
+    return _band_pairs(kept, tags), n_capped, _UnpersistGroup(kept)
 
 
 def dedup_lsh_br_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1782,61 +1796,32 @@ def dedup_lsh_br_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout of the SAME 16-perm signature, the candidate-pair budget,
     the verified (jaccard >= 0.8) pair count, and recall vs the
     exhaustive baseline — the table that picks N_BANDS x
-    ROWS_PER_BAND for a corpus, completing the LSH trust suite
-    (dedup_lsh_eval = one point on this curve;
-    dedup_minhash_est_eval = the estimator's value quality;
-    dedup_routed_probe_sweep = the same dial for the semantic
-    router). Wider bands (more rows per band) buy precision at the
-    cost of recall along the (1/b)^(1/r) S-curve; the sweep measures
-    where THIS corpus sits on it.
+    ROWS_PER_BAND along the (1/b)^(1/r) S-curve (dedup_lsh_eval is
+    one point on it).
 
-    Scale shape (r13 union form): ONE shingle pass, ONE 16-min-agg
-    signature pass, ONE exhaustive-baseline verify, ONE tagged band
-    explode (Σb = 30 rows/doc covering all four layouts), ONE bucket
-    self-join keyed on (layout, band_idx, band_sig) — fan-out still
-    bounded at LSH_BUCKET_CAP members per bucket, truncated buckets
-    counted per layout in n_capped_buckets — and ONE candidate verify
-    over the DISTINCT union of every layout's pairs (the (16,1)
-    catch-all arm's candidate set is a superset of the others', so
-    the union verify costs what that single arm used to; the former
-    per-layout verifies re-scored the same pairs up to four times).
-    Per-layout counts come back from tagged aggregations: candidates,
-    verified = layout candidates ∩ the verified union (identical to
-    verifying each layout alone — a pair's jaccard does not depend on
-    which layout proposed it), and the sampled-recall numerator.
-    Verified pairs are exact-checked, so layout
-    precision-of-candidates is measured, never assumed. The
-    exhaustive baseline (and with it n_exact_pairs and recall) runs
-    on the deterministic hash-sample above EXACT_EVAL_SAMPLE_BOUND
-    docs — see the sampling contract banner."""
+    Scale shape (r13 union form): ONE shingle pass, ONE signature
+    pass, ONE tagged band explode covering all four layouts, ONE
+    bucket self-join keyed on (layout, band_idx, band_sig) with
+    fan-out capped at LSH_BUCKET_CAP (truncations counted in
+    n_capped_buckets), and ONE verify over the DISTINCT union of all
+    layouts' pairs (jaccard does not depend on the proposing layout).
+    The exhaustive baseline's pair count rides the candidate-count
+    job; it is hash-sampled above EXACT_EVAL_SAMPLE_BOUND docs."""
     from distributed_mapreduce_server_spark.catalog import table_row_count
-
-    n_docs = table_row_count(sf_dir, "documents")
-    e = _shingle_rows(spark, sf_dir, 32).persist()
-    e.count()
-    consts = perm_constants(N_PERMS)
-    mh = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P32)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(consts)
-    ]
-    sig = e.groupBy("doc_id").agg(*mh, F.count("*").alias("n_sh")).persist()
-    sig.count()
-    sizes = sig.select("doc_id", "n_sh")
-    e_eval, is_sampled = _exact_eval_sample(e, "doc_id", n_docs)
-    # the exhaustive baseline's ONLY consumer is its pair count — it
-    # folds into the candidate-count job below (r13, guide §2.6) so
-    # the quadratic verify overlaps the bucket self-join instead of
-    # running as its own sequential job
-    exact_cnt = (
-        _pair_jaccard(e_eval, None, sizes=sizes)
-        .filter(F.col("jaccard") >= JACCARD_T)
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit(-1).alias("nb"), "c")
-    )
-    sample_ids = e_eval.select("doc_id").distinct() if is_sampled else None
     from distributed_mapreduce_server_spark.functions import fround_scalar
 
-    # ONE tagged band frame covering all four layouts (Σb rows/doc)
+    e = _shingle_rows(spark, sf_dir, 32).persist()
+    e.count()
+    sig = _minhash_bands(e)[0].persist()
+    sig.count()
+    sizes = sig.select("doc_id", "n_sh")
+
+    def verified(shingles, cand=None):
+        pairs = _pair_jaccard(shingles, cand, sizes=sizes)
+        return pairs.filter(F.col("jaccard") >= JACCARD_T)
+
+    n_docs = table_row_count(sf_dir, "documents")
+    exact, sample_ids = _exact_baseline(e, "doc_id", n_docs, lambda ev, _: verified(ev))
     band_structs = [
         F.struct(
             F.lit(b).alias("nb"),
@@ -1850,57 +1835,29 @@ def dedup_lsh_br_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     bands = sig.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select(
-        "doc_id",
-        F.col("band.nb").alias("nb"),
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_sig").alias("band_sig"),
-    )
+    ).select("doc_id", "band.*")
     cand, n_capped_by, holder = _capped_band_candidates(bands, tag_col="nb")
     cand = cand.persist()
-    # one concurrent job: per-layout candidate counts + the exhaustive
-    # baseline count (tag −1) — the quadratic baseline subtree
-    # schedules alongside the bucket self-join
-    n_cand_by = {
-        row["nb"]: int(row["c"])
-        for row in cand.groupBy("nb")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .unionAll(exact_cnt)
-        .collect()
-    }
-    n_exact = n_cand_by.pop(-1)
+    by_nb = cand.groupBy("nb").agg(F.count("*").cast("bigint").alias("c"))
+    n_cand_by = _counts(by_nb.select(F.col("nb").cast("string").alias("k"), "c"), exact=exact)
+    n_exact = n_cand_by.pop("exact")
     holder.unpersist()
-    # verify the DISTINCT pair union once; each layout's verified set
-    # is its candidates ∩ the verified union (jaccard is
-    # layout-independent)
-    ver_union = (
-        _pair_jaccard(e, cand.select("doc_a", "doc_b").distinct(), sizes=sizes)
-        .filter(F.col("jaccard") >= JACCARD_T)
-        .select("doc_a", "doc_b")
-    )
+    ver_union = verified(e, cand.select("doc_a", "doc_b").distinct())
     tagged_ver = cand.join(ver_union, ["doc_a", "doc_b"], "left_semi").persist()
-    n_ver_by = {
-        row["nb"]: row["c"]
-        for row in tagged_ver.groupBy("nb").agg(F.count("*").alias("c")).collect()
-    }
-    if is_sampled:
-        # recall numerator scoped to the baseline's sample (the
-        # sampling contract); the verified-pair COUNT stays full —
-        # it is the layout's actual output size
-        n_hit_by = {
-            row["nb"]: row["c"]
-            for row in _pairs_within(tagged_ver, sample_ids, "doc_a", "doc_b")
-            .groupBy("nb")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
-    else:
-        n_hit_by = n_ver_by
+
+    def per_layout(pairs):
+        rows = pairs.groupBy("nb").agg(F.count("*").alias("c")).collect()
+        return {str(r["nb"]): r["c"] for r in rows}
+
+    n_ver_by = per_layout(tagged_ver)
+    # the recall numerator is scoped to the baseline's sample; the
+    # verified-pair COUNT stays full (the layout's actual output size)
+    n_hit_by = n_ver_by
+    if sample_ids is not None:
+        n_hit_by = per_layout(_pairs_within(tagged_ver, sample_ids, "doc_a", "doc_b"))
     rows = []
     for b, r in LSH_BR_LAYOUTS:
-        n_cand = n_cand_by.get(b, 0)
-        n_ver = n_ver_by.get(b, 0)
-        n_hit = n_hit_by.get(b, 0)
+        n_cand, n_ver, n_hit = (d.get(str(b), 0) for d in (n_cand_by, n_ver_by, n_hit_by))
         rows.append(
             (
                 b,
@@ -1913,10 +1870,8 @@ def dedup_lsh_br_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_capped_by.get(b, 0),
             )
         )
-    cand.unpersist()
-    tagged_ver.unpersist()
-    e.unpersist()
-    sig.unpersist()
+    for df in (cand, tagged_ver, e, sig):
+        df.unpersist()
     return spark.createDataFrame(
         rows,
         "n_bands int, rows_per_band int, n_candidate_pairs bigint,"
@@ -2019,70 +1974,44 @@ def dedup_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_minhash_est_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash ESTIMATOR-quality evaluation (round 8): over every LSH
-    candidate pair (band collision, NO jaccard threshold — the whole
-    similarity range the sketch is asked about), compare the sketch's
-    Jaccard estimate (fraction of the N_PERMS minhash coordinates that
-    agree — the textbook unbiased estimator) against the exact
-    shingle-set Jaccard: pair count, mean exact, mean estimate, MAE,
-    worst absolute error. Completes the trust suite next to
-    dedup_lsh_eval: that one measures CANDIDATE recall, this one
-    measures the VALUE the sketch reports (at K=16, per-pair std is
-    ~sqrt(j(1-j)/16) ≈ 0.12 — the report shows whether reality matches
-    the theory before anyone routes on estimated similarity).
-
-    Scale shape: identical to dedup_minhash_lsh's (banded candidates,
-    signature-frame joins keyed on doc_id, intersection verify only on
-    candidates); the signature frame carries the 16 coordinates the
-    estimate needs, so no extra pass over the corpus. 1-row output."""
+    candidate pair (band collision, NO jaccard threshold), the
+    sketch's Jaccard estimate (the fraction of the N_PERMS minhash
+    coordinates that agree) against the exact shingle-set Jaccard:
+    pair count, mean exact, mean estimate, MAE, worst absolute error.
+    dedup_lsh_eval measures CANDIDATE recall; this measures the VALUE
+    the sketch reports (per-pair std ~sqrt(j(1-j)/16) ≈ 0.12 at K=16).
+    Scale shape: dedup_minhash_lsh's; the signature frame already
+    carries the 16 coordinates. 1-row output."""
     docs = load_tables(spark, sf_dir, register_views=False).get("documents")
-    docs = docs.select("doc_id", "text")
-    e = _shingle_rows_from(spark, docs, 32).persist()
+    e = _shingle_rows_from(spark, docs.select("doc_id", "text"), 32).persist()
     e.count()
     sig, bands = _minhash_bands(e)
     sig = sig.persist()
     sig.count()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    exact = _pair_jaccard(e, _band_pairs(bands), sizes=sig.select("doc_id", "n_sh"))
+
+    def side(d, s):
+        return sig.select(
+            F.col("doc_id").alias(d), *[F.col(f"mh{i}").alias(f"{s}{i}") for i in range(N_PERMS)]
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+
+    n_eq = functools.reduce(
+        lambda acc, t: acc + t,
+        [(F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(N_PERMS)],
     )
-    exact = _pair_jaccard(e, cand, sizes=sig.select("doc_id", "n_sh")).select(
-        "doc_a", "doc_b", "jaccard"
-    )
-    siga = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"__a{i}") for i in range(N_PERMS)],
-    )
-    sigb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"__b{i}") for i in range(N_PERMS)],
-    )
-    n_eq = None
-    for i in range(N_PERMS):
-        term = (F.col(f"__a{i}") == F.col(f"__b{i}")).cast("int")
-        n_eq = term if n_eq is None else n_eq + term
-    per_pair = (
-        exact.join(siga, "doc_a")
-        .join(sigb, "doc_b")
-        .select(
-            "jaccard",
-            fround(n_eq / F.lit(N_PERMS), 4).alias("est_jaccard"),
+    err = F.abs(F.col("est_jaccard") - F.col("jaccard"))
+    out = (
+        exact.select("doc_a", "doc_b", "jaccard")
+        .join(side("doc_a", "a"), "doc_a")
+        .join(side("doc_b", "b"), "doc_b")
+        .select("jaccard", fround(n_eq / F.lit(N_PERMS), 4).alias("est_jaccard"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_pairs"),
+            fround(F.avg("jaccard"), 4).alias("avg_exact"),
+            fround(F.avg("est_jaccard"), 4).alias("avg_est"),
+            fround(F.avg(err), 4).alias("mae"),
+            fround(F.max(err), 4).alias("max_abs_err"),
         )
-    )
-    out = per_pair.agg(
-        F.count("*").cast("bigint").alias("n_pairs"),
-        fround(F.avg("jaccard"), 4).alias("avg_exact"),
-        fround(F.avg("est_jaccard"), 4).alias("avg_est"),
-        fround(F.avg(F.abs(F.col("est_jaccard") - F.col("jaccard"))), 4).alias("mae"),
-        fround(F.max(F.abs(F.col("est_jaccard") - F.col("jaccard"))), 4).alias(
-            "max_abs_err"
-        ),
     )
     out = _cache_result(out)
     e.unpersist()
@@ -2097,90 +2026,55 @@ def dedup_minhash_est_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 SWEEP_THRESHOLDS = (0.30, 0.35, 0.40, 0.45, 0.50)
 
 
-# The registry/bench sweep runs on the ROUTED candidate set (round
-# 10, VERDICT r9 task 5): at 100 TB the tuning table must not pay
-# the exact n²-flop kernel — the routed generator is exactly the
-# candidate source the production dedup would score, so tuning on it
-# measures the thresholds the deployed pipeline will actually see.
-# "exact" keeps the brute pair-matmul arm for small-corpus audits
-# and the routed-vs-exact invariant test.
-SWEEP_PAIR_SOURCE = "routed"
 
 
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup threshold tuning curve: for each cosine cut in
     SWEEP_THRESHOLDS, how many pairs qualify and how many distinct
-    documents are touched — the table a data engineer reads to pick
-    the dedup threshold (too low: mass deletion; too high: misses) —
-    the semantic-dedup analog of sim_ivf_nprobe_sweep's recall curve.
-
-    Pair source = SWEEP_PAIR_SOURCE (routed): candidates come from
-    dedup_semantic_routed's coarse-bucket generator at the loosest
-    cut, so the whole sweep is linear-ish (O(n·K·d) assignment +
-    within-bucket matmuls) instead of the exact kernel's n²/B FLOPs
-    — the 100 TB shape for a tuning table. The exact arm remains
-    available via _threshold_sweep(..., "exact"); the invariant test
-    pins routed counts ≤ exact counts per cut."""
-    return _threshold_sweep(spark, sf_dir, SWEEP_PAIR_SOURCE)
+    documents are touched — the table that picks the dedup threshold.
+    Pairs come from the ROUTED generator at the loosest cut (round
+    10), so the table never pays the exact n²-flop kernel and tunes
+    on the pairs the deployed pipeline would score; the invariant
+    test folds the exact blocked pairs through _threshold_sweep and
+    pins routed <= exact per cut."""
+    emb, assign = _routed_assignments(spark, sf_dir)
+    pairs = _routed_pairs_from(emb, assign, threshold=min(SWEEP_THRESHOLDS))
+    return _threshold_sweep(spark, pairs)
 
 
-def _threshold_sweep(
-    spark: SparkSession, sf_dir: str, pair_source: str
-) -> DataFrame:
-    """dedup_threshold_sweep's body with the pair source as a
-    parameter (exact | routed).
+def _threshold_sweep(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    """dedup_threshold_sweep's fold over any (vec_a, vec_b, cos_sim)
+    pair frame cut at min(SWEEP_THRESHOLDS).
 
-    Scale shape: ONE pair pass at the loosest cut (exact: the blocked
-    pair-matmul; routed: the bucket-local matmuls — per-task memory
-    contract unchanged in both, only the emitted pair list grows, and
-    it is bounded by the 0.30-threshold pair count), then each grid
-    step folds from the same persisted pair frame with conditional
-    partial aggs. Pair cosines are pre-rounded to the 1e-4 grid by
-    the kernels, so the ≥-comparisons are engine-stable at 2-dp
+    Scale shape: ONE pair pass at the loosest cut, persisted; the
+    whole grid then folds in TWO aggregations (round 10): n_pairs(t)
+    as conditional sums in one row-pass, and docs_affected(t) = docs
+    whose best pair clears t, from a per-doc max-cos reduction (pairs
+    exploded to both endpoints once) feeding the same conditional
+    fold. Pair cosines are pre-rounded to the 1e-4 grid by the
+    kernels, so the ≥-comparisons are engine-stable at 2-dp
     thresholds."""
-    from distributed_mapreduce_server_spark.catalog import table_row_count
-
-    emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
-    if pair_source == "exact":
-        pairs = _blocked_cosine_pairs(
-            spark,
-            emb,
-            n_hint=table_row_count(sf_dir, "embeddings"),
-            threshold=min(SWEEP_THRESHOLDS),
-        ).persist()
-    else:
-        emb, assign = _routed_assignments(spark, sf_dir)
-        pairs = _routed_pairs_from(
-            emb, assign, threshold=min(SWEEP_THRESHOLDS)
-        ).persist()
+    pairs = pairs.persist()
     pairs.count()
-    # The whole grid folds in TWO aggregations (round 10; previously
-    # 2 agg legs + a crossJoin PER threshold — ~11 jobs whose
-    # scheduling overhead dominated the routed pair pass): n_pairs(t)
-    # are conditional sums in one row-pass; docs_affected(t) = docs
-    # whose best pair clears t, so a per-doc max-cos reduction (pairs
-    # exploded to both endpoints once) feeds the same conditional
-    # fold. Values are identical to the per-threshold legs by
-    # construction.
-    pair_sums = [
-        F.sum((F.col("cos_sim") >= t).cast("bigint")).alias(f"p{i}")
-        for i, t in enumerate(SWEEP_THRESHOLDS)
-    ]
     per_doc = (
         pairs.select(F.col("vec_a").alias("v"), "cos_sim")
         .unionAll(pairs.select(F.col("vec_b").alias("v"), "cos_sim"))
         .groupBy("v")
         .agg(F.max("cos_sim").alias("mc"))
     )
-    doc_sums = [
-        F.sum((F.col("mc") >= t).cast("bigint")).alias(f"d{i}")
-        for i, t in enumerate(SWEEP_THRESHOLDS)
-    ]
-    prow = pairs.agg(*pair_sums).collect()[0]
-    drow = per_doc.agg(*doc_sums).collect()[0]
+
+    def at_cuts(df, col):
+        return df.agg(
+            *[
+                F.sum((F.col(col) >= t).cast("bigint")).alias(f"t{i}")
+                for i, t in enumerate(SWEEP_THRESHOLDS)
+            ]
+        ).collect()[0]
+
+    prow, drow = at_cuts(pairs, "cos_sim"), at_cuts(per_doc, "mc")
     pairs.unpersist()
     rows = [
-        (float(t), int(prow[f"p{i}"] or 0), int(drow[f"d{i}"] or 0))
+        (float(t), int(prow[f"t{i}"] or 0), int(drow[f"t{i}"] or 0))
         for i, t in enumerate(SWEEP_THRESHOLDS)
     ]
     return spark.createDataFrame(
@@ -2475,76 +2369,52 @@ def _routed_pairs_from(
     )
 
 
-def dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trust row for the routed near-dup path: recall vs the exact
-    blocked baseline AND the candidate-reduction factor — the two
-    numbers that justify switching the 100 TB pipeline off the
-    quadratic matmul (same discipline as dedup_lsh_eval: measure the
-    fast path against the exact one before trusting it).
-
-    n_candidates counts the scored pairs INCLUDING multi-probe
-    duplicates (the honest FLOP measure); n_brute_pairs = C(n, 2) is
-    what the exact grid scores. Routed pairs are exact-verified, so
-    precision is 1 by construction and recall is the only loss axis.
-
-    Above EXACT_EVAL_SAMPLE_BOUND vectors the exact baseline — and
-    with it n_exact_pairs / n_routed_pairs / n_missed / recall —
-    is computed on the deterministic hash-sample (see the sampling
-    contract banner; n_eval_vecs reports the denominator corpus, == n
-    below the bound); n_candidates / n_brute_pairs stay full-corpus
-    (they cost nothing quadratic)."""
+def _routed_eval(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    assign: DataFrame,
+    keys: tuple[str, ...],
+    strategy: str,
+) -> DataFrame:
+    """The routed trust row for any (assignment, bucket keys, pair
+    strategy): recall vs the exact blocked baseline AND the
+    candidate-reduction factor — the two numbers that justify moving
+    the 100 TB pipeline off the quadratic matmul. n_candidates counts
+    scored pairs INCLUDING multi-probe duplicates (Σ C(bucket, 2));
+    n_brute_pairs = C(n, 2). Routed pairs are exact-verified, so
+    precision is 1 and n_missed = n_exact - n_routed. Above the eval
+    bound the exact-side columns come from the hash-sample
+    (n_eval_vecs is its size); the budgets stay full-corpus. Routed
+    verify, baseline and budget fold count in ONE job."""
     from distributed_mapreduce_server_spark.catalog import table_row_count
 
-    emb, assign = _routed_assignments(spark, sf_dir)
-    assign = assign.persist()
     n = table_row_count(sf_dir, "embeddings")
-    cand = (
-        assign.groupBy("centroid_id")
+    assign = assign.persist()
+    routed = _routed_pairs_from(emb, assign, keys=keys, strategy=strategy)
+    routed = routed.select("vec_a", "vec_b")
+    exact, ids = _cosine_baseline(spark, emb, n)
+    scoped = {}
+    if ids is not None:
+        routed = _pairs_within(routed, ids, "vec_a", "vec_b")
+        scoped = {"eval": ids}
+    budget = (
+        assign.groupBy(*keys)
         .agg(F.count("*").alias("c"))
-        .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).cast("bigint").alias("n_candidates"))
+        .agg(_pair_budget("c").alias("c"))
+        .select(F.lit("cand").alias("k"), "c")
     )
-    routed = _routed_pairs_from(emb, assign).select("vec_a", "vec_b")
-    emb_eval, is_sampled = _exact_eval_sample(emb, "vec_id", n)
-    if is_sampled:
-        emb_eval = emb_eval.select("vec_id", "embedding").persist()
-        n_eval = emb_eval.count()
-        routed = _pairs_within(
-            routed, emb_eval.select("vec_id"), "vec_a", "vec_b"
-        )
-    else:
-        n_eval = n
-    exact = _blocked_cosine_pairs(spark, emb_eval, n_hint=n_eval).select(
-        "vec_a", "vec_b"
-    )
-    # ONE concurrent job for the three independent counts (r13, guide
-    # §2.6 — the q_sketch_error_bounds discipline): the routed verify,
-    # the exact baseline and the budget fold union into a 3-row
-    # collect, so wall-clock tracks the slowest subtree, not the sum.
-    counts = {
-        row["k"]: int(row["c"])
-        for row in routed.agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("routed").alias("k"), "c")
-        .unionAll(
-            exact.agg(F.count("*").cast("bigint").alias("c")).select(
-                F.lit("exact").alias("k"), "c"
-            )
-        )
-        .unionAll(cand.select(F.lit("cand").alias("k"), F.col("n_candidates").alias("c")))
-        .collect()
-    }
-    n_routed, n_exact, n_cand = counts["routed"], counts["exact"], counts["cand"]
+    c = _counts(budget, routed=routed, exact=exact, **scoped)
     assign.unpersist()
-    if is_sampled:
-        emb_eval.unpersist()
-    # routed ⊆ exact (same kernel, same threshold) — missed = difference
+    n_routed, n_exact, n_cand = c["routed"], c["exact"], c["cand"]
     n_brute = n * (n - 1) // 2
     return spark.range(1).select(
-        F.lit(n_eval).cast("bigint").alias("n_eval_vecs"),
+        F.lit(c.get("eval", n)).cast("bigint").alias("n_eval_vecs"),
         F.lit(n_exact).cast("bigint").alias("n_exact_pairs"),
         F.lit(n_routed).cast("bigint").alias("n_routed_pairs"),
         F.lit(n_exact - n_routed).cast("bigint").alias("n_missed"),
-        # max(ne, 1): empty exact baseline pins recall 0.0 (same
-        # convention as dedup_routed_probe_sweep / GREATEST in oracle)
+        # max(ne, 1): an empty exact baseline pins recall 0.0
+        # (GREATEST in the oracle)
         fround(F.lit(n_routed / max(n_exact, 1)), 4).alias("recall"),
         F.lit(n_cand).cast("bigint").alias("n_candidates"),
         F.lit(n_brute).cast("bigint").alias("n_brute_pairs"),
@@ -2552,134 +2422,112 @@ def dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_routed_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe-width tuning curve for the routed near-dup path: for
-    every P in 1..ROUTE_PROBES, the candidate-pair budget and the
-    recall vs the exact baseline — the sim_ivf_nprobe_sweep analog
-    that picks dedup_semantic_routed's dial per corpus (the measured
-    recall/cost trade-off in the module banner came from exactly this
-    curve).
+def dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trust row for the flat routed near-dup path (_routed_eval over
+    the fixed-K codebook's fused bucket verify) — dedup_lsh_eval's
+    discipline: measure the fast path against the exact one before
+    trusting it."""
+    emb, assign = _routed_assignments(spark, sf_dir)
+    return _routed_eval(spark, sf_dir, emb, assign, ("centroid_id",), "fused")
 
-    One assignment pass at the WIDEST width folds every P: a pair is
-    caught at width P iff some shared centroid has rank <= P on BOTH
-    sides, i.e. pair_min_p = MIN over shared centroids of
-    MAX(rank_a, rank_b) — so recall at P is one conditional count
-    over the (tiny) exact-pair frame annotated with pair_min_p, and
-    the candidate budget at P folds from the (centroid, rank) count
-    histogram: sum_c C(n_c(P), 2). No per-P corpus pass, no per-P
-    pair enumeration.
 
-    Scale shape: assignment = one Arrow matmul pass (codebook
-    broadcast); the histogram is K x P rows; the recall join
-    broadcasts the exact pairs (bounded: the near-dup pair list) onto
-    the P-fold assignment frame keyed by vec_id then centroid —
-    nothing corpus-squared anywhere beyond the exact baseline itself,
-    which is hash-sampled above EXACT_EVAL_SAMPLE_BOUND vectors (the
-    sampling contract banner: recall becomes a within-sample estimate
-    with a ±1/sqrt(s) CI; byte-identical below the bound)."""
+def _width_grid(
+    assign: DataFrame, keys: tuple[str, ...], axes: list, exact: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(budgets, caught) per cell of a width grid over a RANKED
+    multi-probe ``assign`` built at the widest widths; ``axes`` holds
+    one (rank column, output column, widths) per routing level.
+    budgets: n_candidates per cell. caught: the ``exact`` (vec_a,
+    vec_b) pairs caught per cell as ``hit`` (cells catching none are
+    absent). A member is in a bucket at a cell iff each rank is <=
+    that axis' width, so ONE (bucket, ranks) histogram, exploded onto
+    the cells including each row, folds every budget; likewise each
+    (exact pair, shared bucket) row with MAX(rank_a, rank_b) per axis,
+    counted distinct per cell. No per-width corpus pass."""
+    ranks = [r for r, _, _ in axes]
+    names = [nm for _, nm, _ in axes]
+
+    def onto_widths(df):
+        for r, nm, ws in axes:
+            on = F.filter(F.array(*map(F.lit, ws)), lambda w: w >= F.col(r))
+            df = df.withColumn(nm, F.explode(on))
+        return df
+
+    def side(v, s):
+        ranked = [F.col(r).alias(r + s) for r in ranks]
+        return assign.select(F.col("vec_id").alias(v), *keys, *ranked)
+
+    hist = assign.groupBy(*keys, *ranks).agg(F.count("*").alias("cnt"))
+    budgets = (
+        onto_widths(hist)
+        .groupBy(*names, *keys)
+        .agg(F.sum("cnt").alias("c"))
+        .groupBy(*names)
+        .agg(_pair_budget("c").alias("n_candidates"))
+    )
+    frontier = (
+        F.broadcast(exact)
+        .join(side("vec_a", "_a"), "vec_a")
+        .join(side("vec_b", "_b"), ["vec_b", *keys])
+        .select("vec_a", "vec_b", *[F.greatest(r + "_a", r + "_b").alias(r) for r in ranks])
+    )
+    caught = (
+        onto_widths(frontier)
+        .groupBy(*names)
+        .agg(F.count_distinct("vec_a", "vec_b").alias("hit"))
+    )
+    return budgets, caught
+
+
+def _probe_sweep(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    assign: DataFrame,
+    keys: tuple[str, ...],
+    axes: list,
+) -> DataFrame:
+    """A routed path's tuning table: _width_grid against the exact
+    cosine baseline (hash-sampled above the eval bound) with recall
+    per cell. Budgets, frontier and the exact-pair count (a 1-row
+    broadcast crossJoin) run as ONE job; the baseline is persisted
+    for its two consumers."""
     from distributed_mapreduce_server_spark.catalog import table_row_count
 
-    n = table_row_count(sf_dir, "embeddings")
-    emb, assign = _routed_assignments(spark, sf_dir, with_rank=True)
     assign = assign.persist()
-
-    # (centroid, rank) histogram -> cumulative bucket size per P ->
-    # candidate budget per P, all in ONE pass over the K x P-row
-    # frame: a rank-r row belongs to every width P >= r, so explode
-    # each histogram row onto its widths and fold.
-    hist = assign.groupBy("centroid_id", "crank").agg(F.count("*").alias("cnt"))
-    widths = F.array(*[F.lit(p) for p in range(1, ROUTE_PROBES + 1)])
-    budgets = (
-        hist.withColumn(
-            "probes",
-            F.explode(F.filter(widths, lambda p: p >= F.col("crank"))),
-        )
-        .groupBy("probes", "centroid_id")
-        .agg(F.sum("cnt").alias("c"))
-        .groupBy("probes")
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - 1) / 2)
-            .cast("bigint")
-            .alias("n_candidates")
-        )
-    )
-
-    # exact pairs annotated with the minimal width that catches them
-    # (hash-sampled above the eval bound — see the sampling contract
-    # banner; recall is then the within-sample estimate)
-    emb_eval, _is_sampled = _exact_eval_sample(emb, "vec_id", n)
-    exact = (
-        _blocked_cosine_pairs(
-            spark, emb_eval, n_hint=min(n, EXACT_EVAL_SAMPLE_TARGET)
-        )
-        .select("vec_a", "vec_b")
-        .persist()
-    )
-    # n_exact folds into the final job below (1-row broadcast
-    # crossJoin, the dedup_nested_probe_sweep pattern): the exact
-    # baseline overlaps the budget fold instead of running as its own
-    # sequential count job; exact stays persisted so its two
-    # consumers share one materialization.
-    aa = assign.select(
-        F.col("vec_id").alias("vec_a"),
-        "centroid_id",
-        F.col("crank").alias("ra"),
-    )
-    ab = assign.select(
-        F.col("vec_id").alias("vec_b"),
-        "centroid_id",
-        F.col("crank").alias("rb"),
-    )
-    pair_min_p = (
-        F.broadcast(exact)
-        .join(aa, "vec_a")
-        .join(ab, ["vec_b", "centroid_id"])
-        .groupBy("vec_a", "vec_b")
-        .agg(F.min(F.greatest(F.col("ra"), F.col("rb"))).alias("min_p"))
-    )
-    caught = pair_min_p.agg(
-        *[
-            F.sum((F.col("min_p") <= p).cast("long")).alias(f"c_{p}")
-            for p in range(1, ROUTE_PROBES + 1)
-        ]
-    )
-    curve = F.array(
-        *[
-            F.struct(
-                F.lit(p).alias("probes"),
-                F.col(f"c_{p}").alias("n_routed_pairs"),
-            )
-            for p in range(1, ROUTE_PROBES + 1)
-        ]
-    )
-    recalls = caught.select(F.explode(curve).alias("r")).select(
-        F.col("r.probes").alias("probes"),
-        F.coalesce(F.col("r.n_routed_pairs"), F.lit(0)).alias("n_routed_pairs"),
-    )
-    ne = exact.agg(F.count("*").cast("bigint").alias("__ne"))
+    exact, _ = _cosine_baseline(spark, emb, table_row_count(sf_dir, "embeddings"))
+    exact = exact.persist()
+    budgets, caught = _width_grid(assign, keys, axes, exact)
+    names = [nm for _, nm, _ in axes]
+    ne = F.col("__ne")
+    hit = F.coalesce(F.col("hit"), F.lit(0))
     out = (
-        budgets.join(recalls, "probes")
-        .crossJoin(F.broadcast(ne))
+        budgets.join(caught, names, "left")
+        .crossJoin(F.broadcast(exact.agg(F.count("*").cast("bigint").alias("__ne"))))
         .select(
-            "probes",
+            *names,
             "n_candidates",
-            F.col("n_routed_pairs").cast("bigint").alias("n_routed_pairs"),
-            F.col("__ne").alias("n_exact_pairs"),
-            # greatest(ne, 1): an empty exact baseline pins recall at
-            # 0.0 deterministically instead of NULL (GREATEST(ne, 1)
-            # in the oracle)
-            fround(
-                F.col("n_routed_pairs")
-                / F.greatest(F.col("__ne").cast("double"), F.lit(1.0)),
-                4,
-            ).alias("recall"),
+            hit.cast("bigint").alias("n_routed_pairs"),
+            ne.alias("n_exact_pairs"),
+            # greatest(ne, 1): an empty baseline pins recall 0.0
+            fround(hit / F.greatest(ne.cast("double"), F.lit(1.0)), 4).alias("recall"),
         )
-        .orderBy("probes")
+        .orderBy(*names)
         .localCheckpoint(eager=True)
     )
     assign.unpersist()
     exact.unpersist()
-    return out.orderBy("probes")
+    return out.orderBy(*names)
+
+
+def dedup_routed_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Probe-width tuning curve for the flat router (the one-axis
+    _probe_sweep): per P in 1..ROUTE_PROBES, the candidate budget and
+    the recall vs the exact baseline — the table that picks
+    dedup_semantic_routed's dial per corpus."""
+    emb, assign = _routed_assignments(spark, sf_dir, with_rank=True)
+    axes = [("crank", "probes", range(1, ROUTE_PROBES + 1))]
+    return _probe_sweep(spark, sf_dir, emb, assign, ("centroid_id",), axes)
 
 
 # Nested coarse→fine routing (VERDICT r10 task 6 — the module
@@ -2893,279 +2741,77 @@ NESTED_SWEEP_P1S = (2, 4, 6, 8, 10, 12, 14)
 
 
 def dedup_nested_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(p1, p2) tuning grid for the NESTED router — the
-    dedup_routed_probe_sweep analog one level deeper, completing the
-    trust suite: per coarse width p1 (NESTED_SWEEP_P1S) and fine
-    width p2 (1..NESTED_P2), the candidate-pair budget and recall vs
-    the exact baseline. This is the table that PICKED (14, 4) — the
+    """(p1, p2) tuning grid for the NESTED router — the two-axis
+    _probe_sweep: per coarse width p1 (NESTED_SWEEP_P1S) and fine
+    width p2 (1..NESTED_P2), the candidate budget and recall vs the
+    exact baseline. This is the table that PICKED (14, 4) — the
     equal-budget dominance claim in the module banner reads straight
-    off it.
-
-    One ranked assignment at the widest widths folds every cell: a
-    member is in bucket (c, f) at width (p1, p2) iff its coarse rank
-    <= p1 AND fine rank <= p2, so budgets fold from ONE
-    (bucket, crank, frank) histogram (each row exploded onto the
-    widths that include it) and recall from each exact pair's
-    per-shared-bucket (max crank, max frank) frontier — no per-width
-    corpus pass, no per-width pair enumeration. The exact baseline is
-    hash-sampled above the eval bound (sampling contract banner)."""
-    from distributed_mapreduce_server_spark.catalog import table_row_count
-
-    n = table_row_count(sf_dir, "embeddings")
-    emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
-    coarse = _route_codebook(spark, sf_dir)
-    fine = _fine_codebook(spark, sf_dir, coarse)
-    assign = _nested_assign(
-        emb, coarse, fine, NESTED_P1, NESTED_P2, with_rank=True
-    ).persist()
-
-    widths1 = F.array(*[F.lit(p) for p in NESTED_SWEEP_P1S])
-    widths2 = F.array(*[F.lit(p) for p in range(1, NESTED_P2 + 1)])
-    hist = assign.groupBy("centroid_id", "fine_id", "crank", "frank").agg(
-        F.count("*").alias("cnt")
+    off it."""
+    emb, assign = _nested_assignments(spark, sf_dir, with_rank=True)
+    axes = [
+        ("crank", "p1", NESTED_SWEEP_P1S),
+        ("frank", "p2", range(1, NESTED_P2 + 1)),
+    ]
+    return _probe_sweep(
+        spark, sf_dir, emb, assign, ("centroid_id", "fine_id"), axes
     )
-    budgets = (
-        hist.withColumn(
-            "p1", F.explode(F.filter(widths1, lambda w: w >= F.col("crank")))
-        )
-        .withColumn(
-            "p2", F.explode(F.filter(widths2, lambda w: w >= F.col("frank")))
-        )
-        .groupBy("p1", "p2", "centroid_id", "fine_id")
-        .agg(F.sum("cnt").alias("c"))
-        .groupBy("p1", "p2")
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - 1) / 2)
-            .cast("bigint")
-            .alias("n_candidates")
-        )
-    )
-
-    emb_eval, _is_sampled = _exact_eval_sample(emb, "vec_id", n)
-    exact = (
-        _blocked_cosine_pairs(
-            spark, emb_eval, n_hint=min(n, EXACT_EVAL_SAMPLE_TARGET)
-        )
-        .select("vec_a", "vec_b")
-        .persist()
-    )
-    # n_exact folds into the final job below (crossJoin of the 1-row
-    # broadcast count) instead of an eager count — the exact baseline
-    # then overlaps the budgets/frontier subtrees in ONE job (r13,
-    # guide §2.6); exact is persisted, so the two consumers (the
-    # frontier broadcast and the count agg) share one materialization.
-    aa = assign.select(
-        F.col("vec_id").alias("vec_a"),
-        "centroid_id",
-        "fine_id",
-        F.col("crank").alias("cra"),
-        F.col("frank").alias("fra"),
-    )
-    ab = assign.select(
-        F.col("vec_id").alias("vec_b"),
-        "centroid_id",
-        "fine_id",
-        F.col("crank").alias("crb"),
-        F.col("frank").alias("frb"),
-    )
-    # (pair, shared bucket) frontier rows — bounded: near-dup pairs ×
-    # ≤ P1·P2 shared buckets
-    pb = (
-        F.broadcast(exact)
-        .join(aa, "vec_a")
-        .join(ab, ["vec_b", "centroid_id", "fine_id"])
-        .select(
-            "vec_a",
-            "vec_b",
-            F.greatest(F.col("cra"), F.col("crb")).alias("cr"),
-            F.greatest(F.col("fra"), F.col("frb")).alias("fr"),
-        )
-    )
-    caught = (
-        pb.withColumn(
-            "p1", F.explode(F.filter(widths1, lambda w: w >= F.col("cr")))
-        )
-        .withColumn(
-            "p2", F.explode(F.filter(widths2, lambda w: w >= F.col("fr")))
-        )
-        .groupBy("p1", "p2")
-        .agg(F.count_distinct("vec_a", "vec_b").alias("n_routed_pairs"))
-    )
-    ne = exact.agg(F.count("*").cast("bigint").alias("__ne"))
-    out = (
-        budgets.join(caught, ["p1", "p2"], "left")
-        .crossJoin(F.broadcast(ne))
-        .select(
-            F.col("p1").cast("int").alias("p1"),
-            F.col("p2").cast("int").alias("p2"),
-            "n_candidates",
-            F.coalesce(F.col("n_routed_pairs"), F.lit(0))
-            .cast("bigint")
-            .alias("n_routed_pairs"),
-            F.col("__ne").alias("n_exact_pairs"),
-            fround(
-                F.coalesce(F.col("n_routed_pairs"), F.lit(0))
-                / F.greatest(F.col("__ne").cast("double"), F.lit(1.0)),
-                4,
-            ).alias("recall"),
-        )
-        .orderBy("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    assign.unpersist()
-    exact.unpersist()
-    return out.orderBy("p1", "p2")
 
 
 def dedup_routed_nested_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trust row for the NESTED router, directly comparable to
-    dedup_routed_eval's flat row: recall vs the (hash-sampled above
-    the eval bound) exact baseline, the multi-probe candidate budget
-    Σ C(bucket, 2) over (coarse, fine) buckets, and the reduction vs
-    brute force. Reading the two eval rows side by side is the
-    equal-budget dominance check: nested must match or beat flat
-    recall on no more candidates."""
-    from distributed_mapreduce_server_spark.catalog import table_row_count
-
+    dedup_routed_eval's flat row (_routed_eval over (coarse, fine)
+    buckets with the pairdist verify). Reading the two rows side by
+    side is the equal-budget dominance check: nested must match or
+    beat flat recall on no more candidates."""
     emb, assign = _nested_assignments(spark, sf_dir)
-    assign = assign.persist()
-    n = table_row_count(sf_dir, "embeddings")
-    cand = (
-        assign.groupBy("centroid_id", "fine_id")
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - 1) / 2)
-            .cast("bigint")
-            .alias("n_candidates")
-        )
-    )
-    routed = _routed_pairs_from(
-        emb, assign, keys=("centroid_id", "fine_id"), strategy="pairdist"
-    ).select("vec_a", "vec_b")
-    emb_eval, is_sampled = _exact_eval_sample(emb, "vec_id", n)
-    if is_sampled:
-        emb_eval = emb_eval.select("vec_id", "embedding").persist()
-        n_eval = emb_eval.count()
-        routed = _pairs_within(
-            routed, emb_eval.select("vec_id"), "vec_a", "vec_b"
-        )
-    else:
-        n_eval = n
-    exact = _blocked_cosine_pairs(spark, emb_eval, n_hint=n_eval).select(
-        "vec_a", "vec_b"
-    )
-    # ONE concurrent job for the three independent counts (r13, guide
-    # §2.6): routed verify + exact baseline + budget fold union into a
-    # 3-row collect — wall-clock tracks the slowest subtree.
-    counts = {
-        row["k"]: int(row["c"])
-        for row in routed.agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("routed").alias("k"), "c")
-        .unionAll(
-            exact.agg(F.count("*").cast("bigint").alias("c")).select(
-                F.lit("exact").alias("k"), "c"
-            )
-        )
-        .unionAll(cand.select(F.lit("cand").alias("k"), F.col("n_candidates").alias("c")))
-        .collect()
-    }
-    n_routed, n_exact, n_cand = counts["routed"], counts["exact"], counts["cand"]
-    assign.unpersist()
-    if is_sampled:
-        emb_eval.unpersist()
-    n_brute = n * (n - 1) // 2
-    return spark.range(1).select(
-        F.lit(n_eval).cast("bigint").alias("n_eval_vecs"),
-        F.lit(n_exact).cast("bigint").alias("n_exact_pairs"),
-        F.lit(n_routed).cast("bigint").alias("n_routed_pairs"),
-        F.lit(n_exact - n_routed).cast("bigint").alias("n_missed"),
-        fround(F.lit(n_routed / max(n_exact, 1)), 4).alias("recall"),
-        F.lit(n_cand).cast("bigint").alias("n_candidates"),
-        F.lit(n_brute).cast("bigint").alias("n_brute_pairs"),
-        fround(F.lit(n_brute) / F.lit(n_cand), 2).alias("candidate_reduction"),
-    )
+    keys = ("centroid_id", "fine_id")
+    return _routed_eval(spark, sf_dir, emb, assign, keys, "pairdist")
 
 
 def dedup_routed_rank1_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trust row for rank-1 index-side probing (SCALING.md finding 3's
-    second lever, VERDICT r12 task 3): the nested router's symmetric
-    probe-intersection rule vs the IVF-search rule where the index
-    side keeps only each vector's HOME (crank = frank = 1) bucket and
-    the query side probes wide. Reports both rules' qualifying-pair
-    counts, the recall of rank-1 against the symmetric rule (rank-1's
-    candidates are a strict subset, so this is the only loss axis),
-    and both rules' candidate JOIN VOLUMES — symmetric emits
-    Σ C(F_c, 2) pre-distinct rows per (coarse, fine) cell (F_c = probe
-    memberships), rank-1 emits Σ F_c·H_c − H_c (H_c = home members;
-    the −H_c removes each vector's self-match) — the multiplicity
-    measure that explodes on clustered-duplicate corpora.
+    second lever): the nested router's symmetric probe-intersection
+    rule vs the IVF-search rule, where the index side keeps only each
+    vector's HOME (crank = frank = 1) bucket and the query side
+    probes wide. Reports both rules' qualifying-pair counts, rank-1's
+    recall against the symmetric rule (its candidates are a strict
+    subset), and both rules' candidate JOIN VOLUMES: Σ C(F_c, 2)
+    symmetric vs Σ F_c·H_c − H_c rank-1 per (coarse, fine) cell (F_c
+    probe memberships, H_c home members, −H_c the self-matches).
 
-    Why this is a separate row and not the nested default: the loss
-    is real and THRESHOLD-shaped. Measured at t=0.45 rank-1 keeps
-    7/14 qualifying pairs at sf0.01 and 167/287 on the clustered
-    rehearsal corpus (31× join-volume cut there) — loose-cut pairs
-    sit in different home cells and meet only in shared non-home
-    probes; at production cuts on the same clustered corpus it keeps
-    94/97 (t=0.6-0.7) and 89/90 (t=0.8). The r12 hypothesis that the
-    pair set would be identical failed measurement (the finding-3
-    discipline: name the real behavior), so the symmetric rule stays
-    the shipped default and this row makes the trade measurable per
-    (corpus, threshold) for pipelines that can spend ~1-3% recall
-    for the volume cap."""
+    Not the nested default because the loss is THRESHOLD-shaped: at
+    t=0.45 rank-1 keeps 7/14 pairs at sf0.01 and 167/287 on the
+    clustered rehearsal corpus (31× join-volume cut there), at
+    production cuts 94/97 (t=0.6-0.7) and 89/90 (t=0.8). This row
+    makes the trade measurable per (corpus, threshold)."""
     emb, assign = _nested_assignments(spark, sf_dir, with_rank=True)
     assign = assign.persist()
-    cells = assign.groupBy("centroid_id", "fine_id").agg(
-        F.count("*").alias("f"),
-        F.sum(
-            F.when(
-                (F.col("crank") == 1) & (F.col("frank") == 1), 1
-            ).otherwise(0)
-        ).alias("h"),
-    )
-    vols = cells.agg(
-        F.sum(F.col("f") * (F.col("f") - 1) / 2)
-        .cast("bigint")
-        .alias("sym_rows"),
-        F.sum(F.col("f") * F.col("h") - F.col("h"))
-        .cast("bigint")
-        .alias("r1_rows"),
-    ).select(
-        F.explode(
-            F.create_map(
-                F.lit("sym_rows"),
-                F.col("sym_rows"),
-                F.lit("r1_rows"),
-                F.col("r1_rows"),
-            )
-        ).alias("k", "c")
-    )
-    sym = _routed_pairs_from(
-        emb, assign, keys=("centroid_id", "fine_id"), strategy="pairdist"
-    )
-    r1 = _routed_pairs_from(
-        emb,
-        assign,
-        keys=("centroid_id", "fine_id"),
-        strategy="pairdist_rank1",
-    )
-    # ONE concurrent job for the four independent counts (r13, guide
-    # §2.6): the two pair verifies are the heavy subtrees and now
-    # schedule together instead of back to back.
-    counts = {
-        row["k"]: int(row["c"])
-        for row in sym.agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("sym").alias("k"), "c")
-        .unionAll(
-            r1.agg(F.count("*").cast("bigint").alias("c")).select(
-                F.lit("r1").alias("k"), "c"
-            )
+    keys = ("centroid_id", "fine_id")
+    home = F.when((F.col("crank") == 1) & (F.col("frank") == 1), 1).otherwise(0)
+    vols = (
+        assign.groupBy(*keys)
+        .agg(F.count("*").alias("f"), F.sum(home).alias("h"))
+        .agg(
+            _pair_budget("f").alias("sym_rows"),
+            F.sum(F.col("f") * F.col("h") - F.col("h")).cast("bigint").alias("r1_rows"),
         )
-        .unionAll(vols)
-        .collect()
-    }
-    n_sym, n_r1 = counts["sym"], counts["r1"]
+        .select(
+            F.explode(
+                F.create_map(
+                    F.lit("sym_rows"), F.col("sym_rows"), F.lit("r1_rows"), F.col("r1_rows")
+                )
+            ).alias("k", "c")
+        )
+    )
+    # ONE job: the two pair verifies are the heavy subtrees and
+    # schedule together instead of back to back
+    c = _counts(
+        vols,
+        sym=_routed_pairs_from(emb, assign, keys=keys, strategy="pairdist"),
+        r1=_routed_pairs_from(emb, assign, keys=keys, strategy="pairdist_rank1"),
+    )
     assign.unpersist()
-    sym_rows, r1_rows = counts["sym_rows"], counts["r1_rows"]
+    n_sym, n_r1, sym_rows, r1_rows = c["sym"], c["r1"], c["sym_rows"], c["r1_rows"]
     return spark.range(1).select(
         F.lit(n_sym).cast("bigint").alias("n_sym_pairs"),
         F.lit(n_r1).cast("bigint").alias("n_r1_pairs"),

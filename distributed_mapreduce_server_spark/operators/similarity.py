@@ -100,11 +100,19 @@ def _collect_matrix(df, id_col: str = "vec_id", vec_col: str = "embedding"):
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 neighbors for query vectors (vec_id < 5)."""
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
+    return _cosine_topk(emb, F.col("embedding")).orderBy("query_id", "rank")
+
+
+def _cosine_topk(emb: DataFrame, vec: "F.Column") -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rank) exact top-TOP_K by cosine
+    of ``vec`` (any vector expression over ``embedding``) for the
+    query vectors (vec_id < N_QUERIES): the query set broadcasts
+    against one corpus scan, a per-query window keeps k."""
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+        F.col("vec_id").alias("query_id"), vec.alias("qe")
     )
     c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
+        F.col("vec_id").alias("neighbor_id"), vec.alias("ce")
     )
     scored = broadcast(q).crossJoin(c).withColumn(
         "cos_sim", fround(cosine_sim(F.col("qe"), F.col("ce")), 4)
@@ -114,7 +122,6 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1268,25 +1275,38 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_at_k(spark: SparkSession, sf_dir: str, label_ddl: str, arms) -> DataFrame:
+    """recall@k of every (label value, arm frame) in ``arms`` against
+    the exact cosine top-k, one row per arm: n_returned, n_hits and
+    recall_at_k = |arm ∩ exact top-k| / |exact top-k|, ordered by the
+    label column ``label_ddl`` declares. The exact top-k is built and
+    persisted once for the whole loop; each arm is consumed as it is
+    yielded and its intersection is a top-k-sized join (|Q|·k rows)."""
+    from distributed_mapreduce_server_spark.functions import fround_scalar
+
+    key = ["query_id", "neighbor_id"]
+    exact = sim_cosine_topk(spark, sf_dir).select(*key).persist()
+    n_exact = exact.count()
+    rows = []
+    for name, arm in arms:
+        got = arm.select(*key).persist()
+        n_ret = got.count()
+        n_hit = got.join(exact, key, "left_semi").count()
+        got.unpersist()
+        rows.append((name, n_ret, n_hit, fround_scalar(n_hit / n_exact, 4)))
+    exact.unpersist()
+    return spark.createDataFrame(
+        rows, f"{label_ddl}, n_returned bigint, n_hits bigint, recall_at_k double"
+    ).orderBy(label_ddl.split()[0])
+
+
 def sim_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN recall harness: every approximate serving arm (Hamming/BQ,
     IVF, IVF-PQ, LSH, full-scan PQ-ADC) scored against the exact
-    cosine top-k — the one-table answer to "which index can I trust
-    at which recall" that an ANN stack publishes before pointing any
-    arm at 100 TB (dedup_lsh_eval's role, for the similarity side).
-
-    recall@k = |arm ∩ exact top-k| / |exact top-k|. Every arm here is
-    deterministic (rounded-grid selection, id tie-breaks), so the
-    report itself carries a FULL value oracle — the DuckDB side
-    re-runs each arm's own oracle SQL as a CTE and intersects, so the
-    eval can never drift from the operators it evaluates. Each arm
-    keeps its own scale shape; the intersections are top-k-sized
-    joins (|Q|·k rows), nothing corpus-scale beyond the arms
-    themselves."""
-    from distributed_mapreduce_server_spark.functions import fround_scalar
-
-    exact = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id").persist()
-    n_exact = exact.count()
+    cosine top-k by _recall_at_k. Every arm is deterministic, so the
+    DuckDB twin re-runs each arm's own oracle SQL as a CTE and
+    intersects: the eval can never drift from the operators it
+    evaluates."""
     arms = [
         ("hamming", sim_hamming_ann),
         ("ivf", sim_ivf_ann),
@@ -1294,17 +1314,9 @@ def sim_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("lsh", sim_lsh_ann),
         ("pq_adc", sim_pq_adc_ann),
     ]
-    rows = []
-    for name, fn in arms:
-        got = fn(spark, sf_dir).select("query_id", "neighbor_id").persist()
-        n_ret = got.count()
-        n_hit = got.join(exact, ["query_id", "neighbor_id"], "left_semi").count()
-        got.unpersist()
-        rows.append((name, n_ret, n_hit, fround_scalar(n_hit / n_exact, 4)))
-    exact.unpersist()
-    return spark.createDataFrame(
-        rows, "arm string, n_returned bigint, n_hits bigint, recall_at_k double"
-    ).orderBy("arm")
+    return _recall_at_k(
+        spark, sf_dir, "arm string", ((n, fn(spark, sf_dir)) for n, fn in arms)
+    )
 
 
 # all-pairs k-NN join: neighbors kept per vector (block count B is
@@ -1563,53 +1575,31 @@ def sim_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     much of the full-dimension cosine top-k survives when vectors are
     truncated to the first MATRYOSHKA_DIM dims (the MRL serving
     trade-off: 4x less memory/bandwidth per vector vs recall). Emits
-    per-query overlap and recall@k between the two rankings — the
-    measurement that decides whether the cheap index is good enough.
+    per-query overlap and recall@k between the two rankings.
 
-    Plan shape: both rankings are the sim_cosine_topk plan (broadcast
-    queries x one corpus scan; the truncated arm scans SLICED arrays,
-    so at scale the column reader feeds 4x fewer bytes into the
-    kernel); the final overlap join is k-vs-k per query."""
+    Plan shape: both rankings are the sim_cosine_topk plan
+    (_cosine_topk); the truncated arm scans SLICED arrays, so at scale
+    the column reader feeds 4x fewer bytes into the kernel; the
+    overlap join is k-vs-k per query."""
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
-
-    def topk(vec_expr_q, vec_expr_c, label: str) -> DataFrame:
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), vec_expr_q.alias("qe")
-        )
-        c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-            F.col("vec_id").alias("neighbor_id"), vec_expr_c.alias("ce")
-        )
-        scored = broadcast(q).crossJoin(c).select(
-            "query_id",
-            "neighbor_id",
-            fround(cosine_sim(F.col("qe"), F.col("ce")), 4).alias("s"),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= TOP_K)
-            .select("query_id", F.col("neighbor_id").alias(f"nb_{label}"))
-        )
-
-    full = topk(F.col("embedding"), F.col("embedding"), "full")
-    trunc_expr = F.slice(F.col("embedding"), 1, MATRYOSHKA_DIM)
-    trunc = topk(trunc_expr, trunc_expr, "trunc")
-    overlap = full.join(
-        trunc.withColumnRenamed("query_id", "qid2"),
-        (F.col("query_id") == F.col("qid2")) & (F.col("nb_full") == F.col("nb_trunc")),
+    full = _cosine_topk(emb, F.col("embedding"))
+    trunc = _cosine_topk(emb, F.slice(F.col("embedding"), 1, MATRYOSHKA_DIM))
+    counts = (
+        full.select("query_id", "neighbor_id")
+        .join(trunc.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count("*").cast("integer").alias("n_overlap"))
     )
-    counts = overlap.groupBy("query_id").agg(F.count("*").cast("integer").alias("n_overlap"))
     # left join from the query list so a fully-divergent ranking still
     # reports its query with recall 0 instead of silently vanishing
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(F.col("vec_id").alias("query_id"))
+    n_overlap = F.coalesce(F.col("n_overlap"), F.lit(0))
     return (
         queries.join(counts, "query_id", "left")
         .select(
             "query_id",
-            F.coalesce(F.col("n_overlap"), F.lit(0)).cast("integer").alias("n_overlap"),
-            fround(
-                F.coalesce(F.col("n_overlap"), F.lit(0)) / F.lit(float(TOP_K)), 2
-            ).alias("recall_at_k"),
+            n_overlap.cast("integer").alias("n_overlap"),
+            fround(n_overlap / F.lit(float(TOP_K)), 2).alias("recall_at_k"),
         )
         .orderBy("query_id")
     )
@@ -1859,32 +1849,15 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF_SWEEP_PROBES — the table an ANN operator reads to pick nprobe
     (latency grows ~linearly with probes; recall saturates), extending
     sim_ann_eval's single-point IVF row to the whole dial. Every
-    point is the SAME deterministic IVF arm (_ivf_topk) at a
-    different width, so the sweep carries a full composed oracle —
-    the DuckDB side re-runs the IVF chain per width and intersects
-    with the exact top-k, like sim_ann_eval. Cost scales with
-    Σ probes × bucket size; the exact baseline is the bounded
-    broadcast-query-set scan."""
-    from distributed_mapreduce_server_spark.functions import fround_scalar
-
-    exact = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id").persist()
-    n_exact = exact.count()
-    codebook = _ivf_codebook(spark, sf_dir)
-    rows = []
-    for nprobe in IVF_SWEEP_PROBES:
-        got = (
-            _ivf_topk(spark, sf_dir, nprobe, centroids=codebook)
-            .select("query_id", "neighbor_id")
-            .persist()
-        )
-        n_ret = got.count()
-        n_hit = got.join(exact, ["query_id", "neighbor_id"], "left_semi").count()
-        got.unpersist()
-        rows.append((nprobe, n_ret, n_hit, fround_scalar(n_hit / n_exact, 4)))
-    exact.unpersist()
-    return spark.createDataFrame(
-        rows, "nprobe int, n_returned bigint, n_hits bigint, recall_at_k double"
-    ).orderBy("nprobe")
+    point is the SAME deterministic IVF arm (_ivf_topk, one memoized
+    codebook) at a different width, so the sweep carries a full
+    composed oracle like sim_ann_eval."""
+    return _recall_at_k(
+        spark,
+        sf_dir,
+        "nprobe int",
+        ((p, _ivf_topk(spark, sf_dir, p)) for p in IVF_SWEEP_PROBES),
+    )
 
 
 KNN_OUTLIER_SIGMA = 1.5

@@ -788,333 +788,23 @@ def _family(key: str) -> str:
     return "q" if head.startswith("q") else head
 
 
-# Driver-sample rotation, tier form (VERDICT r9 task 2): the driver
-# verifies the FIRST 50 keys of all_queries() each round, so keys
-# that already have a green driver CORRECTNESS row (union of
-# CORRECTNESS_r01..r11 keys, 218 of 290) are demoted to a second
-# tier and every never-sampled key is emitted first. With this set
-# regenerated from CORRECTNESS_r01..r12 (263 sampled), round 13's
-# prefix carries the final 29 never-sampled keys — the tail ends.
-# Maintenance: after each driver round, add that round's sampled
-# keys here (scripts/update_sampled.py regenerates the block from
-# the CORRECTNESS_r*.json files); tests/test_plans.py
-# test_driver_sampled_not_stale fails the suite if this block lags
-# the committed CORRECTNESS files (the r12 staleness can't recur).
-_DRIVER_SAMPLED = frozenset(
-    {
-        "dedup_cluster_stats",
-        "dedup_clusters",
-        "dedup_clusters_bigstar",
-        "dedup_containment",
-        "dedup_embedding_cosine",
-        "dedup_exact",
-        "dedup_exact_substr",
-        "dedup_incremental",
-        "dedup_incremental_neardup",
-        "dedup_incremental_neardup_indexed",
-        "dedup_keep_best_quality",
-        "dedup_keep_canonical",
-        "dedup_lsh_br_sweep",
-        "dedup_lsh_eval",
-        "dedup_minhash_est_eval",
-        "dedup_minhash_lsh",
-        "dedup_nested_probe_sweep",
-        "dedup_ngram_jaccard",
-        "dedup_prefix_filter_jaccard",
-        "dedup_routed_eval",
-        "dedup_routed_nested_eval",
-        "dedup_routed_probe_sweep",
-        "dedup_semantic_clusters",
-        "dedup_semantic_keep",
-        "dedup_semantic_routed",
-        "dedup_semantic_routed_nested",
-        "dedup_simhash",
-        "dedup_span_clean",
-        "dedup_substr_multiscale",
-        "dedup_substr_spans",
-        "dedup_threshold_sweep",
-        "emb_binary_quantize",
-        "emb_centroid_distances",
-        "emb_centroids",
-        "emb_cluster_purity",
-        "emb_covariance",
-        "emb_coverage",
-        "emb_dim_stats",
-        "emb_encode_backfill",
-        "emb_ivf_balance",
-        "emb_kmeans",
-        "emb_label_coherence",
-        "emb_norm_outliers",
-        "emb_outlier_knn_distance",
-        "emb_pca_invariants",
-        "emb_pca_project",
-        "emb_pq_quantize",
-        "emb_quantize",
-        "mm_audio_features",
-        "mm_decode_meta",
-        "mm_frame_sample",
-        "mm_modality_mix",
-        "mm_payload_dedup",
-        "mm_payload_entropy",
-        "mm_phash_neardup",
-        "mm_quality_gate",
-        "mm_resize_stats",
-        "mm_scene_segments",
-        "mm_shard_manifest",
-        "mr_distinct",
-        "mr_distributed_sort",
-        "mr_exec_grep",
-        "mr_exec_join",
-        "mr_exec_wordcount",
-        "mr_grep",
-        "mr_grep_count",
-        "mr_inverted_index",
-        "mr_join",
-        "mr_secondary_sort",
-        "mr_wordcount",
-        "pysource_range_events",
-        "pysource_stream_events",
-        "q10_returned_items",
-        "q11_important_parts",
-        "q12_late_shipments",
-        "q13_order_count_distribution",
-        "q14_promo_revenue",
-        "q15_top_supplier",
-        "q16_supplier_part_variety",
-        "q17_small_qty_revenue",
-        "q18_large_orders",
-        "q19_disjunctive_filter",
-        "q1_pricing_summary",
-        "q20_promo_suppliers",
-        "q21_late_suppliers",
-        "q22_idle_customers",
-        "q2_min_cost_supplier",
-        "q3_shipping_priority",
-        "q5_local_supplier",
-        "q6_revenue_forecast",
-        "q7_volume_shipping",
-        "q8_market_share",
-        "q9_product_profit",
-        "q_abc_analysis",
-        "q_approx_distinct",
-        "q_approx_quantiles",
-        "q_argmax_suite",
-        "q_asof_last_purchase",
-        "q_asof_nearest_purchase",
-        "q_asof_next_purchase",
-        "q_asof_tolerance",
-        "q_association_rules",
-        "q_balance_percentiles",
-        "q_benford_audit",
-        "q_chi2_segment_priority",
-        "q_cohort_retention_matrix",
-        "q_concurrent_sessions",
-        "q_conversion_delay_stats",
-        "q_corr_matrix",
-        "q_customer_rfm",
-        "q_customers_no_orders",
-        "q_data_quality_audit",
-        "q_events_anomaly",
-        "q_events_autocorrelation",
-        "q_events_dau_wau",
-        "q_events_error_rate_slo",
-        "q_events_funnel",
-        "q_events_intersect_except",
-        "q_events_json_extract",
-        "q_events_lateness",
-        "q_events_markov_stationary",
-        "q_events_paths",
-        "q_events_pivot",
-        "q_events_retention",
-        "q_events_sessionize",
-        "q_events_transitions",
-        "q_events_trend_fit",
-        "q_events_user_entropy",
-        "q_events_value_deciles",
-        "q_events_windowed",
-        "q_ewma_revenue",
-        "q_full_outer_balance",
-        "q_gini_revenue",
-        "q_graph_adamic_adar",
-        "q_graph_assortativity",
-        "q_graph_bfs_levels",
-        "q_graph_clustering_coefficient",
-        "q_graph_common_neighbors",
-        "q_graph_community_lpa",
-        "q_graph_degree_distribution",
-        "q_graph_kcore_peel",
-        "q_graph_triangles",
-        "q_grouping_sets",
-        "q_ivm_join_delta",
-        "q_join_size_audit",
-        "q_market_segment_sales",
-        "q_moving_avg_events",
-        "q_nation_rollup",
-        "q_open_order_backlog",
-        "q_order_gaps",
-        "q_order_priority",
-        "q_orders_yoy",
-        "q_pagerank",
-        "q_part_pairs",
-        "q_percentiles",
-        "q_personalized_pagerank",
-        "q_price_histogram",
-        "q_range_join_keyless",
-        "q_range_join_views_before_purchase",
-        "q_region_cube",
-        "q_repeat_purchase_survival",
-        "q_rolling_revenue_30d",
-        "q_running_revenue",
-        "q_salted_skew_join",
-        "q_seasonality_index",
-        "q_session_overlap_join",
-        "q_sessions_bounce_rate",
-        "q_sketch_error_bounds",
-        "q_skyline_parts",
-        "q_sql_funnel",
-        "q_sql_interface",
-        "q_sql_q1_pricing",
-        "q_sql_q3_shipping",
-        "q_sql_q5_local_supplier",
-        "q_sql_q6_revenue",
-        "q_sql_sessionize_kpi",
-        "q_stats_suite",
-        "q_supplier_hhi",
-        "q_time_weighted_avg",
-        "q_top_customer_per_nation",
-        "q_unpivot_balance",
-        "q_window_funnel",
-        "q_window_suite",
-        "sim_ann_eval",
-        "sim_bq_rerank",
-        "sim_cosine_topk",
-        "sim_hamming_ann",
-        "sim_hybrid_search",
-        "sim_ivf_ann",
-        "sim_ivf_nprobe_sweep",
-        "sim_ivfpq_ann",
-        "sim_ivfpq_residual",
-        "sim_knn_join",
-        "sim_lsh_ann",
-        "sim_matryoshka_eval",
-        "sim_mmr_rerank",
-        "sim_pq_adc_ann",
-        "sim_range_search",
-        "src_csv_roundtrip",
-        "src_gzip_text_roundtrip",
-        "src_json_roundtrip",
-        "src_orc_roundtrip",
-        "stream_anomaly_filter",
-        "stream_attribution",
-        "stream_burst_detection",
-        "stream_click_purchase_join",
-        "stream_click_purchase_left_join",
-        "stream_dedup_exact",
-        "stream_dedup_within_watermark",
-        "stream_error_rate_slo",
-        "stream_events_windowed",
-        "stream_hierarchical_rollup",
-        "stream_ingest_partitioned",
-        "stream_kl_drift",
-        "stream_model_quality_filter",
-        "stream_neardup_ingest",
-        "stream_phrase_search",
-        "stream_session_window_native",
-        "stream_sessionize",
-        "stream_static_join_windowed",
-        "stream_trending_topk",
-        "stream_trending_topk_append",
-        "stream_upsert_foreachbatch",
-        "stream_wordcount",
-        "text_bigram_logprob",
-        "text_bpe_pair_counts",
-        "text_bpe_train",
-        "text_c4_filters",
-        "text_chunking",
-        "text_collocations",
-        "text_contamination_check",
-        "text_corpus_pipeline",
-        "text_corpus_pipeline_neardup",
-        "text_corpus_pipeline_semantic",
-        "text_corpus_report",
-        "text_fingerprint",
-        "text_global_shuffle",
-        "text_gopher_filters",
-        "text_kfold_split",
-        "text_lang_distribution",
-        "text_langid",
-        "text_mixture_sample",
-        "text_perplexity_filter",
-        "text_phrase_search",
-        "text_pii_scrub",
-        "text_quality_keep",
-        "text_quality_score",
-        "text_repetition_ratio",
-        "text_reservoir_sample",
-        "text_sample_stratified",
-        "text_sequence_packing",
-        "text_source_mix",
-        "text_tfidf",
-        "text_token_entropy",
-        "text_token_stats",
-        "text_tokenize_to_ids",
-        "text_top_ngrams",
-        "text_train_val_split",
-        "text_unigram_fertility",
-        "text_unigram_logprob",
-        "text_unigram_tokenize",
-        "text_unigram_train",
-        "text_weighted_sample",
-    }
-)
-
-# test_registry_prefix_covers_all_families pins one key per FULLY
-# driver-sampled family into every 50-prefix (round 11: pysource +
-# mr; round 12: mm, emb and sim joined them — every key in those
-# families now has a green driver row) so the lint's family-coverage
-# guarantee and the rotation coexist — the prefix is then 45
-# never-sampled keys + these repeats; a pure never-sampled 50 is
-# impossible under the lint.
-_TIER0_PINNED = frozenset(
-    {
-        "pysource_range_events",
-        "mr_wordcount",
-        "mm_decode_meta",
-        "emb_centroids",
-        "sim_cosine_topk",
-    }
-)
-
-
-def _tier(key: str) -> int:
-    if key in _TIER0_PINNED:
-        return 0
-    return 1 if key in _DRIVER_SAMPLED else 0
-
-
 def all_queries() -> dict[str, QueryFn]:
     """Registry keys ROUND-ROBIN-INTERLEAVED across operator families
-    (q/mr/dedup/sim/emb/text/mm/stream/pysource) in two tiers: tier 0
-    (no driver CORRECTNESS row yet) is fully emitted before tier 1
-    (already green in some driver round), each tier itself family-
-    interleaved. Any prefix sample — e.g. the driver verifying the
-    first 50 keys — covers every family with tier-0 members roughly
-    proportionally AND is drawn from the never-sampled set first.
-    Deterministic: family order = first appearance, intra-family
-    order = registration order."""
+    (q/mr/dedup/sim/emb/text/mm/stream/pysource/...), so any prefix
+    sample covers every family roughly proportionally. Deterministic:
+    family order = first appearance, intra-family order =
+    registration order."""
     from itertools import zip_longest
 
     fams: dict[str, list[str]] = {}
     for k in _QUERIES:
         fams.setdefault(_family(k), []).append(k)
-    out: dict[str, QueryFn] = {}
-    for t in (0, 1):
-        cols = [[k for k in ks if _tier(k) == t] for ks in fams.values()]
-        for row in zip_longest(*cols):
-            for k in row:
-                if k is not None:
-                    out[k] = _QUERIES[k]
-    return out
+    return {
+        k: _QUERIES[k]
+        for row in zip_longest(*fams.values())
+        for k in row
+        if k is not None
+    }
 
 
 def all_oracles() -> dict[str, str]:

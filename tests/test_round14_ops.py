@@ -58,16 +58,41 @@ class TestContractLine:
             "sf",
         }
         assert parsed["queries"].keys() == best["queries"].keys()
-        # per-query values are 2dp (file keeps 3dp medians)
+        # per-query values are 2dp, 3dp under 0.1 s (file keeps 3dp
+        # medians)
         assert all(
-            round(v, 2) == v for v in parsed["queries"].values()
+            round(v, 3 if v < 0.1 else 2) == v
+            for v in parsed["queries"].values()
         )
         # the cross-round totals keep full precision
         assert parsed["value"] == best["value"]
         assert parsed["headline_value"] == best["headline_value"]
 
+    def test_sub_tenth_second_rows_keep_three_decimals(self):
+        from bench import contract_line
+
+        best = {
+            "metric": "m",
+            "value": 1.2345,
+            "unit": "s",
+            "headline_value": 0.9876,
+            "sf": "sf0.1",
+            "queries": {"fast": 0.0042, "edge": 0.0996, "slow": 0.1234},
+        }
+        q = contract_line(best)["queries"]
+        # a 4 ms row would print as 0.0 at 2 decimals
+        assert q == {"fast": 0.004, "edge": 0.1, "slow": 0.12}
+
 
 class TestScopedConf:
+    def test_unset_key_is_unset_again(self, spark):
+        key = "spark.dmrs.test.scopedConfUnsetKey"
+        with pytest.raises(Exception):
+            spark.conf.get(key)  # unset, no default
+        with scoped_conf(spark, {key: "1"}):
+            assert spark.conf.get(key) == "1"
+        assert spark.conf.get(key, None) is None
+
     def test_sets_and_restores(self, spark):
         key = "spark.sql.adaptive.enabled"
         prev = spark.conf.get(key)

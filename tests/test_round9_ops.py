@@ -196,16 +196,21 @@ def test_threshold_sweep_routed_bounded_by_exact(spark, sf_smoke):
     the tuning table must not pay the n²-flop kernel, but the brute
     audit path remains for small corpora)."""
     from distributed_mapreduce_server_spark.operators.dedup import (
+        _blocked_cosine_pairs,
         _threshold_sweep,
     )
 
+    emb = load_tables(spark, sf_smoke, register_views=False)["embeddings"]
+    exact_pairs = _blocked_cosine_pairs(
+        spark, emb, threshold=min(SWEEP_THRESHOLDS)
+    )
     routed = {
         r["threshold"]: (r["n_pairs"], r["n_docs_affected"])
-        for r in _threshold_sweep(spark, sf_smoke, "routed").collect()
+        for r in dedup_threshold_sweep(spark, sf_smoke).collect()
     }
     exact = {
         r["threshold"]: (r["n_pairs"], r["n_docs_affected"])
-        for r in _threshold_sweep(spark, sf_smoke, "exact").collect()
+        for r in _threshold_sweep(spark, exact_pairs).collect()
     }
     assert set(routed) == set(exact) == set(SWEEP_THRESHOLDS)
     for t in routed:
